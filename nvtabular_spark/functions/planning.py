@@ -16,7 +16,6 @@ expensive operation in the job.  These helpers replace it:
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -72,10 +71,8 @@ def ensure_min_parallelism(df: DataFrame,
 #: per-reduce-partition byte target for window shuffles (guide §2.2:
 #: size partitions so per-task sort state fits execution memory). The
 #: session default partition count is kept for anything smaller —
-#: only genuinely large inputs fan out wider. Env-overridable so a
-#: cluster profile can retune without code changes.
-WINDOW_TARGET_BYTES = int(os.environ.get(
-    "NVTS_WINDOW_TARGET_BYTES", 32 << 20))
+#: only genuinely large inputs fan out wider.
+WINDOW_TARGET_BYTES = 32 << 20
 
 
 def scale_window_partitions(df: DataFrame, keys) -> DataFrame:

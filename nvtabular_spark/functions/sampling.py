@@ -170,14 +170,14 @@ def split_time_holdout(df: DataFrame, ts_col: str, cutoff,
     construction (rows inside the embargo belong to NEITHER split;
     NULL timestamps are dropped from both, they have no place on a
     time axis)."""
-    from ..operators.temporal import Sessionize
+    from ..operators.temporal import epoch_seconds
     if embargo_seconds < 0:
         raise ValueError("embargo_seconds must be >= 0")
     if isinstance(cutoff, str):
         cut = F.unix_micros(F.to_timestamp(F.lit(cutoff))) / F.lit(1e6)
     else:
         cut = F.lit(float(cutoff))
-    sec = Sessionize._seconds(df, ts_col)
+    sec = epoch_seconds(df, ts_col)
     train = df.filter(sec < cut - F.lit(float(embargo_seconds)))
     holdout = df.filter(sec >= cut)
     return train, holdout

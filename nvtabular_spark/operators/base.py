@@ -21,6 +21,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import planning
 from ..plans.graph import ColumnSelector, Node, _to_node
 
 
@@ -80,21 +81,6 @@ class Operator:
         """Raw input columns required beyond the selector (e.g. a target
         column). These bypass namespacing — always read from the source."""
         return []
-
-    def window_fusion(self, ctx, df):
-        """Optional fusion hook for window-backed ops: return the op's
-        full output as ``{actual_output_name: Column}`` of window
-        expressions (nested window functions allowed — Catalyst
-        extracts them), or None when not applicable. The compiler
-        batches CONSECUTIVE fusable ops into ONE projection so window
-        expressions sharing a (partitionBy, orderBy) spec land in one
-        WindowExec — each extra Window operator re-buffers every
-        partition's rows, which is the dominant cost on a skewed hot
-        entity (measured 17.2s -> 9.6s for the 16M-row 4-window
-        feature pass). Ops returning non-None must also expose
-        ``partition_cols`` (used once per batch for the adaptive
-        repartition gate)."""
-        return None
 
     # -- execution ---------------------------------------------------------
     def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
@@ -185,6 +171,61 @@ class Operator:
         (``Workflow.fit_schema``); None = inputs keep their dtype.
         Default: the op's ``out_dtype`` cast target when it has one."""
         return getattr(self, "out_dtype", None)
+
+
+def as_list(v) -> list:
+    """A scalar (column name, shift, agg name) as a one-element list."""
+    return [v] if isinstance(v, (str, int)) else list(v)
+
+
+class WindowOperator(Operator):
+    """An op whose whole output is window expressions partitioned by
+    ``partition_cols`` (ordered by ``order_by``, read from the source).
+    Subclasses define only validation, ``output_column_names`` and
+    :meth:`window_fusion`; :func:`lower_windows` is the single place
+    they are lowered, for one op (:meth:`transform`) or a batch.
+
+    The compiler batches CONSECUTIVE window ops into ONE projection so
+    window expressions sharing a (partitionBy, orderBy) spec land in
+    one WindowExec — each extra Window operator re-buffers every
+    partition's rows, which is the dominant cost on a skewed hot
+    entity (measured 17.2s -> 9.6s for the 16M-row 4-window feature
+    pass). The adaptive repartition gate runs once per batch."""
+
+    cheap_transform = False
+
+    #: Sessionize orders by its own input column and has no sort keys
+    order_by: List[str] = []
+
+    def __init__(self, partition_cols, order_by=None):
+        self.partition_cols = as_list(partition_cols)
+        if order_by is not None:
+            self.order_by = as_list(order_by)
+
+    def dependencies(self) -> List[str]:
+        return self.partition_cols + self.order_by
+
+    def window_fusion(self, ctx: TransformContext,
+                      df: DataFrame) -> Dict[str, Column]:
+        """The op's full output as ``{actual_output_name: Column}`` of
+        window expressions (nested window functions allowed — Catalyst
+        extracts them). ``df`` is read for its schema only."""
+        raise NotImplementedError
+
+    def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
+        return lower_windows(df, [(self, ctx)])
+
+
+def lower_windows(df: DataFrame, batch) -> DataFrame:
+    """Add the window outputs of ``batch`` — ``[(WindowOperator, ctx)]``
+    — to ``df`` in one ``withColumns``, behind the adaptive partition
+    gate on the first op's keys."""
+    cols: Dict[str, Column] = {}
+    for op, ctx in batch:
+        cols.update(op.window_fusion(ctx, df))
+    # looked up at call time: profilers replace the module attribute
+    df = planning.scale_window_partitions(df, batch[0][0].partition_cols)
+    return df.withColumns(cols)
 
 
 class StatOperator(Operator):

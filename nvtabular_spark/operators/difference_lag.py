@@ -12,29 +12,22 @@ from __future__ import annotations
 
 from typing import List, Optional, Union
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .base import Operator, TransformContext
-from ..functions.planning import scale_window_partitions
+from .base import WindowOperator, as_list
 from ..plans.graph import ColumnSelector
 
 
-class DifferenceLag(Operator):
-    cheap_transform = False  # window-backed
+class DifferenceLag(WindowOperator):
+    """Signed shifts: a negative shift differences against a later row
+    (lead), as in the reference."""
 
     def __init__(self, partition_cols: Union[str, List[str]],
                  shift: Union[int, List[int]] = 1,
                  order_by: Optional[Union[str, List[str]]] = None):
-        self.partition_cols = [partition_cols] if isinstance(partition_cols, str) \
-            else list(partition_cols)
-        self.shifts = [shift] if isinstance(shift, int) else list(shift)
-        if order_by is None:
-            order_by = []
-        self.order_by = [order_by] if isinstance(order_by, str) else list(order_by)
-
-    def dependencies(self):
-        return self.partition_cols + self.order_by
+        super().__init__(partition_cols, [] if order_by is None else order_by)
+        self.shifts = as_list(shift)
 
     def output_column_names(self, selector: ColumnSelector):
         return [f"{c}_difference_lag_{s}" for c in selector.names
@@ -51,10 +44,6 @@ class DifferenceLag(Operator):
                     else F.lead(F.col(act), -s).over(w)
                 cols[name] = F.col(act) - shifted
         return cols
-
-    def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
-        df = scale_window_partitions(df, self.partition_cols)
-        return df.withColumns(self.window_fusion(ctx, df))
 
     def output_tags(self):
         return ["continuous"]

@@ -29,9 +29,18 @@ from typing import List, Optional, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .base import AggStatOperator, Operator, TransformContext
-from ..functions.planning import scale_window_partitions
+from .base import (AggStatOperator, Operator, TransformContext,
+                   WindowOperator, as_list)
 from ..plans.graph import ColumnSelector
+
+
+def epoch_seconds(df: DataFrame, col: str) -> Column:
+    """The engine's epoch-seconds rule: a timestamp column as
+    fractional epoch seconds (matches DuckDB epoch()), any other column
+    cast to double."""
+    if df.schema[col].dataType.simpleString().startswith("timestamp"):
+        return F.unix_micros(F.col(col).cast("timestamp")) / F.lit(1e6)
+    return F.col(col).cast("double")
 
 
 class AsOfJoin(Operator):
@@ -110,7 +119,7 @@ class AsOfJoin(Operator):
         if tol is not None:
             from pyspark.sql.types import (DoubleType, StructField,
                                            StructType)
-            rsec = Sessionize._seconds(right, self.right_ts_col)
+            rsec = epoch_seconds(right, self.right_ts_col)
 
             def _rv_type(c):
                 return StructType([
@@ -176,7 +185,7 @@ class AsOfJoin(Operator):
             for c in self.value_cols:
                 cols[ctx.out(f"{c}{self.suffix}")] = F.col(f"__rv_{c}")
         else:
-            lsec = Sessionize._seconds(filled, self.ts_col)
+            lsec = epoch_seconds(filled, self.ts_col)
             for c in self.value_cols:
                 s = F.col(f"__rv_{c}")
                 cols[ctx.out(f"{c}{self.suffix}")] = F.when(
@@ -283,90 +292,51 @@ class AsOfJoin(Operator):
         return op
 
 
-class Lag(Operator):
+class Lag(WindowOperator):
     """``lag(x, k)`` over an entity-time window; NULL at boundaries.
-    Strictly past-looking for k >= 1 → zero leakage."""
+    Every shift k must be >= 1: strictly past-looking → zero leakage."""
 
-    cheap_transform = False  # window-backed
+    _shift, _kind = staticmethod(F.lag), "lag"
 
     def __init__(self, partition_cols: Union[str, List[str]],
                  order_by: Union[str, List[str]], shifts: Union[int, List[int]] = 1):
-        self.partition_cols = [partition_cols] if isinstance(partition_cols, str) \
-            else list(partition_cols)
-        self.order_by = [order_by] if isinstance(order_by, str) else list(order_by)
-        self.shifts = [shifts] if isinstance(shifts, int) else list(shifts)
-
-    def dependencies(self):
-        return self.partition_cols + self.order_by
+        super().__init__(partition_cols, order_by)
+        self.shifts = as_list(shifts)
+        if not all(isinstance(s, int) and s >= 1 for s in self.shifts):
+            raise ValueError(f"{type(self).__name__} shifts must be ints "
+                             f">= 1, got {self.shifts}")
 
     def output_column_names(self, selector: ColumnSelector):
-        return [f"{c}_lag_{s}" for c in selector.names for s in self.shifts]
+        return [f"{c}_{self._kind}_{s}" for c in selector.names
+                for s in self.shifts]
 
     def window_fusion(self, ctx, df):
         w = Window.partitionBy(*self.partition_cols).orderBy(*self.order_by)
-        cols = {}
-        for pub, act in ctx.pairs():
-            for s in self.shifts:
-                cols[ctx.out(f"{pub}_lag_{s}")] = F.lag(F.col(act), s).over(w)
-        return cols
-
-    def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
-        df = scale_window_partitions(df, self.partition_cols)
-        return df.withColumns(self.window_fusion(ctx, df))
+        return {ctx.out(f"{pub}_{self._kind}_{s}"):
+                self._shift(F.col(act), s).over(w)
+                for pub, act in ctx.pairs() for s in self.shifts}
 
 
-class Lead(Operator):
+class Lead(Lag):
     """``lead(x, k)`` — future-looking by definition; intended for label
     construction, never for features at serving time."""
 
-    cheap_transform = False  # window-backed
-
-    def __init__(self, partition_cols: Union[str, List[str]],
-                 order_by: Union[str, List[str]], shifts: Union[int, List[int]] = 1):
-        self.partition_cols = [partition_cols] if isinstance(partition_cols, str) \
-            else list(partition_cols)
-        self.order_by = [order_by] if isinstance(order_by, str) else list(order_by)
-        self.shifts = [shifts] if isinstance(shifts, int) else list(shifts)
-
-    def dependencies(self):
-        return self.partition_cols + self.order_by
-
-    def output_column_names(self, selector: ColumnSelector):
-        return [f"{c}_lead_{s}" for c in selector.names for s in self.shifts]
-
-    def window_fusion(self, ctx, df):
-        w = Window.partitionBy(*self.partition_cols).orderBy(*self.order_by)
-        cols = {}
-        for pub, act in ctx.pairs():
-            for s in self.shifts:
-                cols[ctx.out(f"{pub}_lead_{s}")] = F.lead(F.col(act), s).over(w)
-        return cols
-
-    def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
-        df = scale_window_partitions(df, self.partition_cols)
-        return df.withColumns(self.window_fusion(ctx, df))
+    _shift, _kind = staticmethod(F.lead), "lead"
 
 
-class RollingBackfill(Operator):
+class RollingBackfill(WindowOperator):
     """Fill nulls from neighbours within an entity-time window.
     ``direction='forward'`` (default) carries the last past non-null
     value forward — reads only ``t' <= t``, no leakage.
     ``direction='backward'`` reads the future (use for offline label
     cleanup only)."""
 
-    cheap_transform = False  # window-backed
-
     def __init__(self, partition_cols: Union[str, List[str]],
                  order_by: Union[str, List[str]], direction: str = "forward"):
         if direction not in ("forward", "backward"):
             raise ValueError("direction must be 'forward' or 'backward'")
-        self.partition_cols = [partition_cols] if isinstance(partition_cols, str) \
-            else list(partition_cols)
-        self.order_by = [order_by] if isinstance(order_by, str) else list(order_by)
+        super().__init__(partition_cols, order_by)
         self.direction = direction
-
-    def dependencies(self):
-        return self.partition_cols + self.order_by
 
     def window_fusion(self, ctx, df):
         base = Window.partitionBy(*self.partition_cols).orderBy(*self.order_by)
@@ -383,62 +353,62 @@ class RollingBackfill(Operator):
                 cols[ctx.out(pub)] = F.first(c, ignorenulls=True).over(w)
         return cols
 
-    def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
-        df = scale_window_partitions(df, self.partition_cols)
-        return df.withColumns(self.window_fusion(ctx, df))
 
-
-class Sessionize(Operator):
+class Sessionize(WindowOperator):
     """Session ids from timestamp gaps: a new session starts when
     ``ts - lag(ts) > gap`` seconds. Applied to the timestamp column;
     outputs ``<ts>_session_id`` (0-based per entity). Uses only past
     rows → zero leakage."""
 
-    cheap_transform = False  # window-backed
-
     def __init__(self, partition_cols: Union[str, List[str]], gap: float):
-        self.partition_cols = [partition_cols] if isinstance(partition_cols, str) \
-            else list(partition_cols)
+        super().__init__(partition_cols)
         self.gap = gap
-
-    def dependencies(self):
-        return list(self.partition_cols)
 
     def output_column_names(self, selector: ColumnSelector):
         return [f"{c}_session_id" for c in selector.names]
 
-    @staticmethod
-    def _seconds(df: DataFrame, act: str):
-        dt = df.schema[act].dataType.simpleString()
-        if dt.startswith("timestamp"):
-            # fractional epoch seconds (matches DuckDB epoch())
-            return F.unix_micros(F.col(act).cast("timestamp")) / F.lit(1e6)
-        return F.col(act).cast("double")
-
     def window_fusion(self, ctx, df):
         cols = {}
         for pub, act in ctx.pairs():
-            ts = self._seconds(df, act)
+            ts = epoch_seconds(df, act)
             w = Window.partitionBy(*self.partition_cols).orderBy(F.col(act))
             prev = F.lag(ts).over(w)
             boundary = F.when(prev.isNull(), F.lit(0)) \
                 .when(ts - prev > F.lit(float(self.gap)), F.lit(1)) \
                 .otherwise(F.lit(0))
-            wsum = (Window.partitionBy(*self.partition_cols)
-                    .orderBy(F.col(act))
-                    .rowsBetween(Window.unboundedPreceding, 0))
+            wsum = w.rowsBetween(Window.unboundedPreceding, 0)
             # the nested lag inside the running sum is extracted by
             # Catalyst into its own Window level automatically
             cols[ctx.out(f"{pub}_session_id")] = F.sum(boundary).over(wsum) \
                 .cast("long")
         return cols
 
-    def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
-        df = scale_window_partitions(df, self.partition_cols)
-        return df.withColumns(self.window_fusion(ctx, df))
+
+def _check_time_frame(order_by: List[str], window_seconds,
+                      gap_seconds) -> None:
+    """Contract of the trailing time-range frame shared by RollingAgg
+    and TimeDecay."""
+    if len(order_by) != 1:
+        raise ValueError("a time-range frame orders by exactly one "
+                         "timestamp/numeric column")
+    if int(window_seconds) <= 0 or int(gap_seconds) < 1:
+        raise ValueError("window_seconds must be > 0 and "
+                         "gap_seconds >= 1 (whole seconds; the "
+                         ">=1s gap is what guarantees the "
+                         "strictly-past contract under ties)")
 
 
-class RollingAgg(Operator):
+def _time_frame(op: WindowOperator, df: DataFrame):
+    """(epoch seconds of the op's timestamp, the range frame
+    [ts - window_seconds, ts - gap_seconds] over them). Int boundaries
+    coerce to the double order key."""
+    sec = epoch_seconds(df, op.order_by[0])
+    return sec, (Window.partitionBy(*op.partition_cols).orderBy(sec)
+                 .rangeBetween(-int(op.window_seconds),
+                               -int(op.gap_seconds)))
+
+
+class RollingAgg(WindowOperator):
     """Rolling aggregates over the strictly-past window: e.g. trailing
     mean/sum/count of the previous ``n`` events (row frame ending at
     -1 row) or of the trailing ``window_seconds`` of wall time (range
@@ -468,19 +438,15 @@ class RollingAgg(Operator):
             "count": F.count, "std": F.stddev_samp, "var": F.var_samp}
     _DISTINCT = {"nunique", "approx_nunique"}
 
-    cheap_transform = False  # window-backed
-
     def __init__(self, partition_cols: Union[str, List[str]],
                  order_by: Union[str, List[str]],
                  window_rows: Optional[int] = None,
                  aggs: Union[str, List[str]] = "mean",
                  window_seconds: Optional[int] = None,
                  gap_seconds: int = 1):
-        self.partition_cols = [partition_cols] if isinstance(partition_cols, str) \
-            else list(partition_cols)
-        self.order_by = [order_by] if isinstance(order_by, str) else list(order_by)
+        super().__init__(partition_cols, order_by)
         self.window_rows = window_rows
-        self.aggs = [aggs] if isinstance(aggs, str) else list(aggs)
+        self.aggs = as_list(aggs)
         self.window_seconds = window_seconds
         self.gap_seconds = gap_seconds
         bad = set(self.aggs) - set(self._FNS) - self._DISTINCT
@@ -491,17 +457,7 @@ class RollingAgg(Operator):
                 raise ValueError(
                     "window_rows and window_seconds are exclusive; "
                     "compose two RollingAgg ops for both frames")
-            if len(self.order_by) != 1:
-                raise ValueError("a time-range frame orders by exactly "
-                                 "one timestamp/numeric column")
-            if int(window_seconds) <= 0 or int(gap_seconds) < 1:
-                raise ValueError("window_seconds must be > 0 and "
-                                 "gap_seconds >= 1 (whole seconds; the "
-                                 ">=1s gap is what guarantees the "
-                                 "strictly-past contract under ties)")
-
-    def dependencies(self):
-        return self.partition_cols + self.order_by
+            _check_time_frame(self.order_by, window_seconds, gap_seconds)
 
     def _suffix(self):
         if self.window_seconds is not None:
@@ -514,19 +470,13 @@ class RollingAgg(Operator):
                 for a in self.aggs]
 
     def window_fusion(self, ctx, df):
-        base = Window.partitionBy(*self.partition_cols)
         if self.window_seconds is not None:
-            # range frame [ts - window_seconds, ts - gap_seconds] over
-            # fractional epoch seconds (Sessionize._seconds ≡ DuckDB
-            # epoch()); int boundaries coerce to the double order key
-            sec = Sessionize._seconds(df, self.order_by[0])
-            w = (base.orderBy(sec)
-                 .rangeBetween(-int(self.window_seconds),
-                               -int(self.gap_seconds)))
+            _, w = _time_frame(self, df)
         else:
             start = Window.unboundedPreceding if self.window_rows is None \
                 else -self.window_rows
-            w = (base.orderBy(*self.order_by)
+            w = (Window.partitionBy(*self.partition_cols)
+                 .orderBy(*self.order_by)
                  .rowsBetween(start, -1))  # -1: strictly before current row
         n = self._suffix()
         cols = {}
@@ -546,12 +496,8 @@ class RollingAgg(Operator):
                 cols[ctx.out(f"{pub}_rolling_{a}_{n}")] = out
         return cols
 
-    def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
-        df = scale_window_partitions(df, self.partition_cols)
-        return df.withColumns(self.window_fusion(ctx, df))
 
-
-class TimeDecay(Operator):
+class TimeDecay(WindowOperator):
     """Exponentially time-decayed trailing aggregates — the classic
     CTR-counter feature: at each (entity, t),
 
@@ -573,35 +519,23 @@ class TimeDecay(Operator):
     Zero Exchange on entity-bucketed input (same window as RollingAgg).
     """
 
-    cheap_transform = False  # window-backed
-
     def __init__(self, partition_cols: Union[str, List[str]],
                  order_by: str,
                  half_life_seconds: float,
                  window_seconds: int,
                  gap_seconds: int = 1,
                  aggs: Union[str, List[str]] = "sum"):
-        self.partition_cols = [partition_cols] if isinstance(partition_cols, str) \
-            else list(partition_cols)
-        self.order_by = [order_by] if isinstance(order_by, str) else list(order_by)
+        super().__init__(partition_cols, order_by)
         self.half_life_seconds = float(half_life_seconds)
         self.window_seconds = int(window_seconds)
         self.gap_seconds = int(gap_seconds)
-        self.aggs = [aggs] if isinstance(aggs, str) else list(aggs)
-        if len(self.order_by) != 1:
-            raise ValueError("TimeDecay orders by exactly one "
-                             "timestamp/numeric column")
+        self.aggs = as_list(aggs)
+        _check_time_frame(self.order_by, window_seconds, gap_seconds)
         if self.half_life_seconds <= 0:
             raise ValueError("half_life_seconds must be > 0")
-        if self.window_seconds <= 0 or self.gap_seconds < 1:
-            raise ValueError("window_seconds must be > 0 and "
-                             "gap_seconds >= 1")
         bad = set(self.aggs) - {"sum", "count"}
         if bad:
             raise ValueError(f"unsupported decay aggs: {sorted(bad)}")
-
-    def dependencies(self):
-        return self.partition_cols + self.order_by
 
     def output_column_names(self, selector: ColumnSelector):
         h = int(self.half_life_seconds)
@@ -609,13 +543,9 @@ class TimeDecay(Operator):
                 for a in self.aggs]
 
     def window_fusion(self, ctx, df):
-        sec = Sessionize._seconds(df, self.order_by[0])
-        w = (Window.partitionBy(*self.partition_cols)
-             .orderBy(sec)
-             .rangeBetween(-self.window_seconds, -self.gap_seconds))
+        sec, w = _time_frame(self, df)
         h = F.lit(self.half_life_seconds)
         half = F.lit(0.5)
-        cur = sec
         cols = {}
         for pub, act in ctx.pairs():
             pairs = F.collect_list(
@@ -629,14 +559,10 @@ class TimeDecay(Operator):
                 out = F.aggregate(
                     pairs, F.lit(0.0),
                     lambda acc, x: acc + contrib(x)
-                    * F.pow(half, (cur - x["t"]) / h))
+                    * F.pow(half, (sec - x["t"]) / h))
                 name = f"{pub}_decay_{a}_h{int(self.half_life_seconds)}s"
                 cols[ctx.out(name)] = out
         return cols
-
-    def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
-        df = scale_window_partitions(df, self.partition_cols)
-        return df.withColumns(self.window_fusion(ctx, df))
 
 
 class ExpandingTargetEncoding(AggStatOperator):
@@ -773,7 +699,7 @@ class ExpandingTargetEncoding(AggStatOperator):
     # -- transform: one range window per key group -----------------------------
     def transform(self, ctx: TransformContext, df: DataFrame) -> DataFrame:
         self._require_fitted()
-        sec = Sessionize._seconds(df, self.order_by)
+        sec = epoch_seconds(df, self.order_by)
         cols = {}
         for g in self._groups(ctx.selector):
             acts = [ctx.inputs.get(c, c) for c in g]

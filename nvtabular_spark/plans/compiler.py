@@ -54,7 +54,8 @@ class CompiledPlan:
         sweep computing all column moments together (moments.py:28-61);
         at 100 TB it is the difference between 1 and N input scans."""
         from ..operators.base import (AggStatOperator, Operator,
-                                      StatOperator, TransformContext)
+                                      StatOperator, TransformContext,
+                                      WindowOperator, lower_windows)
 
         available = set(df.columns)
         maps: Dict[int, Dict[str, str]] = {}
@@ -119,30 +120,17 @@ class CompiledPlan:
 
         sinkable_pending: list = []   # [(op, ctx)] projections applied last
 
-        # -- window-op fusion ---------------------------------------------
-        # Consecutive ops exposing window_fusion() batch into ONE
-        # projection: window expressions sharing a (partitionBy,
-        # orderBy) spec then land in one WindowExec instead of one per
-        # op — each extra Window operator re-buffers every partition,
-        # which dominates on a skewed hot entity (measured ~1.8x on the
-        # 16M-row 4-window feature pass). The adaptive repartition gate
-        # runs once per batch.
+        # -- window-op fusion (see WindowOperator) -------------------------
+        # consecutive window ops are lowered together, in one projection
         win_pending: list = []        # [(op, ctx)] consecutive window ops
         win_cols: set = set()         # their (not yet created) outputs
 
         def apply_windows():
             nonlocal df_work
-            if not win_pending:
-                return
-            from ..functions.planning import scale_window_partitions
-            df_work = scale_window_partitions(
-                df_work, win_pending[0][0].partition_cols)
-            merged: Dict[str, object] = {}
-            for _op, _ctx, cols_ in win_pending:
-                merged.update(cols_)
-            df_work = df_work.withColumns(merged)
-            win_pending.clear()
-            win_cols.clear()
+            if win_pending:
+                df_work = lower_windows(df_work, win_pending)
+                win_pending.clear()
+                win_cols.clear()
 
         def apply_sinkable():
             nonlocal df_work
@@ -380,15 +368,13 @@ class CompiledPlan:
             needs_fit = isinstance(op, StatOperator) and (fit or refit) \
                 and (refit or not op.fitted)
 
-            if not needs_fit and not node.dependency_nodes:
+            if isinstance(op, WindowOperator) and not node.dependency_nodes:
                 out_publics = op.output_column_names(selector)
                 ctx.outputs = {p: f"_n{idx}__{p}" for p in out_publics}
-                wf_cols = op.window_fusion(ctx, df_work)
-                if wf_cols is not None:
-                    win_pending.append((op, ctx, wf_cols))
-                    win_cols.update(ctx.outputs.values())
-                    maps[id(node)] = ctx.outputs
-                    continue
+                win_pending.append((op, ctx))
+                win_cols.update(ctx.outputs.values())
+                maps[id(node)] = ctx.outputs
+                continue
 
             if needs_fit and getattr(op, "defer_ok", False):
                 out_publics = op.output_column_names(selector)
