@@ -260,11 +260,9 @@ class Node:
     def output_columns(self) -> List[str]:
         if self.is_selection:
             return list(self.selector.names)
-        cols = self.input_columns()
-        if self.op is not None:
-            out = self.op.output_column_names(self.input_group_selector())
-        else:
-            out = cols
+        sel = self.input_group_selector()
+        out = list(sel.names) if self.op is None \
+            else self.op.output_column_names(sel)
         if self.removed:
             out = [c for c in out if c not in self.removed]
         if self.subset is not None:

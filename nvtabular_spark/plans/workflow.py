@@ -9,6 +9,7 @@ single lazily-composed DataFrame — Catalyst is the executor.
 
 from __future__ import annotations
 
+import copy
 from typing import List, Optional
 
 from pyspark.sql import DataFrame
@@ -30,6 +31,18 @@ def _apply_props(cs: ColumnSchema, props: dict, col: str, outs) -> None:
         cs.properties.update(props[col])
     else:
         cs.properties.update(props)
+
+
+def _annotated(df: DataFrame, annotations: dict) -> Schema:
+    """``df``'s schema (dtypes authoritative) with the tags and
+    properties of ``annotations`` (name → ColumnSchema) laid over it."""
+    schema = Schema.from_spark(df.schema)
+    for cs in schema.column_schemas.values():
+        src = annotations.get(cs.name)
+        if src is not None:
+            cs.tags |= src.tags
+            cs.properties.update(src.properties)
+    return schema
 
 
 class Workflow:
@@ -72,7 +85,8 @@ class Workflow:
         pruned = self._prune(self._unwrap(df))
         self.input_schema = Schema.from_spark(pruned.schema)
         out = self.plan.run(pruned, fit=True)
-        self.output_schema = self._build_output_schema(out)
+        self.output_schema = _annotated(
+            out, self._propagate_schema(self.input_schema))
         return self
 
     def fit_schema(self, schema: Schema) -> "Workflow":
@@ -89,53 +103,7 @@ class Workflow:
         # absent on EVERY path)
         wanted = [c for c in self.input_columns() if c in schema]
         self.input_schema = Schema([schema[c].copy() for c in wanted])
-        # walk the DAG carrying a per-column schema so annotations
-        # (tags/properties/declared dtype) PROPAGATE through later
-        # renames — reference column-mapping contract
-        # (tests/unit/ops/test_lambda.py:195
-        # test_lambdaop_dtype_propagation: LambdaOp(dtype=...) >>
-        # Rename(...) keeps the dtype on the renamed column)
-        known = {c.name: c.copy()
-                 for c in schema.column_schemas.values()}
-        for node in self.plan.order:
-            if node.op is None:
-                continue
-            sel = node.input_group_selector()
-            outs = node.op.output_column_names(sel)
-            ins = list(sel.names)
-            dt = node.op.output_dtype()
-            list_in: dict = {}
-            if len(outs) == len(ins):
-                # 1:1 op: each output inherits its positional input's
-                # tags/properties under the new name. The dtype rides
-                # along ONLY when the op declares one (`dt`) or is a
-                # pure schema op (`preserves_dtype`) — a value-encoding
-                # op without a declared dtype must report UNKNOWN, not
-                # the input's dtype
-                keep_dtype = getattr(node.op, "preserves_dtype", False)
-                for i, o in zip(ins, outs):
-                    src = known.get(i)
-                    cs = src.copy() if src is not None else ColumnSchema(o)
-                    cs.name = o
-                    list_in[o] = bool(src and
-                                      str(src.dtype or "")
-                                      .startswith("array"))
-                    if not keep_dtype:
-                        cs.dtype = None
-                    known[o] = cs
-            for col in outs:
-                cs = known.setdefault(col, ColumnSchema(col))
-                cs.tags |= set(node.op.output_tags())
-                _apply_props(cs, node.op.output_properties(), col, outs)
-                if dt:
-                    # an element-wise op over a LIST column produces a
-                    # list of the declared element dtype (Categorify on
-                    # array<string> → array<int>), so wrap the declared
-                    # scalar dtype for list-typed inputs
-                    if list_in.get(col) and not str(dt).startswith("array"):
-                        cs.dtype = f"array<{dt}>"
-                    else:
-                        cs.dtype = dt
+        known = self._propagate_schema(schema)
         self.output_schema = Schema(
             [known.get(n) or ColumnSchema(n)
              for n in self.plan.root.output_columns()])
@@ -182,14 +150,8 @@ class Workflow:
             # Schema object would let in-place tagging on one Dataset
             # mutate the workflow and every other transform result
             if self.output_schema is not None:
-                sch = Schema.from_spark(out.schema)
-                for cs in sch.column_schemas.values():
-                    if cs.name in self.output_schema:
-                        src = self.output_schema[cs.name]
-                        import copy
-                        cs.tags |= set(src.tags)
-                        cs.properties.update(copy.deepcopy(src.properties))
-                ds._schema = sch
+                ds._schema = _annotated(out, copy.deepcopy(
+                    self.output_schema.column_schemas))
             return ds
         return out
 
@@ -266,38 +228,59 @@ class Workflow:
             raise KeyError(f"Workflow requires missing input columns {missing}")
         return df.select(*cols)
 
-    def _build_output_schema(self, out_df: DataFrame) -> Schema:
-        schema = Schema.from_spark(out_df.schema)
-        # walk the DAG accumulating per-op tags/properties under each
-        # column's CURRENT name, carrying them through 1:1 renames —
-        # same propagation rule as fit_schema, so a Categorify domain
-        # survives a downstream Rename (reference
-        # test_ops_schema.py:172 run_op_full with Rename(postfix))
-        known: dict = {}
+    def _propagate_schema(self, schema: Schema) -> dict:
+        """The one schema walk: name -> ColumnSchema of every column the
+        DAG sees, seeded with ``schema`` (the input) and carrying each
+        column's tags/properties/declared dtype through the ops, so
+        annotations PROPAGATE through later renames — reference
+        column-mapping contract (tests/unit/ops/test_lambda.py:195
+        test_lambdaop_dtype_propagation: LambdaOp(dtype=...) >>
+        Rename(...) keeps the dtype on the renamed column; and
+        test_ops_schema.py:172: a Categorify domain survives a
+        downstream Rename)."""
+        known = {c.name: c.copy() for c in schema.column_schemas.values()}
         for node in self.plan.order:
             if node.op is None:
                 continue
             sel = node.input_group_selector()
             outs = node.op.output_column_names(sel)
             ins = list(sel.names)
+            dt = node.op.output_dtype()
+            list_in: dict = {}
             if len(outs) == len(ins):
+                # 1:1 op: each output inherits its positional input's
+                # tags/properties under the new name. The dtype rides
+                # along ONLY when the op declares one (`dt`) or is a
+                # pure schema op (`preserves_dtype`) — a value-encoding
+                # op without a declared dtype must report UNKNOWN, not
+                # the input's dtype
+                keep_dtype = getattr(node.op, "preserves_dtype", False)
                 for i, o in zip(ins, outs):
-                    if o != i and i in known:
-                        cs = known[i].copy()
-                        cs.name = o
-                        known[o] = cs
-            props = node.op.output_properties()
+                    src = known.get(i)
+                    cs = src.copy() if src is not None else ColumnSchema(o)
+                    cs.name = o
+                    list_in[o] = bool(src and
+                                      str(src.dtype or "")
+                                      .startswith("array"))
+                    if not keep_dtype:
+                        cs.dtype = None
+                    known[o] = cs
+            tags, props = set(node.op.output_tags()), \
+                node.op.output_properties()
             for col in outs:
                 cs = known.setdefault(col, ColumnSchema(col))
-                cs.tags |= set(node.op.output_tags())
+                cs.tags |= tags
                 _apply_props(cs, props, col, outs)
-        # merge into the data-derived schema (dtypes authoritative)
-        for name, cs in schema.column_schemas.items():
-            acc = known.get(name)
-            if acc is not None:
-                cs.tags |= acc.tags
-                cs.properties.update(acc.properties)
-        return schema
+                if dt:
+                    # an element-wise op over a LIST column produces a
+                    # list of the declared element dtype (Categorify on
+                    # array<string> → array<int>), so wrap the declared
+                    # scalar dtype for list-typed inputs
+                    if list_in.get(col) and not str(dt).startswith("array"):
+                        cs.dtype = f"array<{dt}>"
+                    else:
+                        cs.dtype = dt
+        return known
 
     # -- serialization --------------------------------------------------------
     def save(self, path: str) -> None:

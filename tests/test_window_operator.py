@@ -63,6 +63,27 @@ def test_window_gate_repartitions_large_inputs(spark, tmp_path,
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
+@pytest.mark.parametrize("keys", [("entity_id", "source"),
+                                  ("source", "entity_id")])
+def test_window_gate_sizes_every_key_set_of_a_batch(spark, tmp_path,
+                                                    monkeypatch, keys):
+    """A batch mixing partition keys runs the gate on each key set, so
+    every key's window shuffle is widened whatever the branch order."""
+    path = str(tmp_path / "seqs")
+    tokenized_sequences(spark, 5000, seed=42).write.parquet(path)
+    src = spark.read.parquet(path)
+    monkeypatch.setattr(planning, "WINDOW_TARGET_BYTES", 1)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    wf = nvt.Workflow((["n_tok"] >> ops.Lag(keys[0], "ts", 1))
+                      + (["n_tok"] >> ops.Lag(keys[1], "ts", 1)
+                         >> ops.Rename(postfix="_b"))
+                      + ["doc_id"])
+    found = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\)",
+                       _window_plan(wf.transform(src)))
+    assert sorted(found) == [("entity_id", str(8 * parts)),
+                             ("source", str(8 * parts))]
+
+
 def test_window_gate_runs_once_per_fused_batch(spark, monkeypatch):
     """The gate is looked up on the planning module at call time and
     runs once per batch of consecutive window ops."""
