@@ -42,6 +42,8 @@ micro-optimize small fits; use it to avoid re-scanning a corpus.
 
 from __future__ import annotations
 
+from .workflow import _overlay
+
 
 class WorkflowMergeError(ValueError):
     pass
@@ -105,4 +107,9 @@ def merge_fits(into, other):
         pairs.append((oa, ob))
     for oa, ob in pairs:
         oa.merge_fitted(ob)
+    # the schema holds the ops' property objects only until a save/load
+    # round trip, so re-derive the merged ops' tags and properties
+    if into.output_schema is not None and into.input_schema is not None:
+        _overlay(into.output_schema,
+                 into._propagate_schema(into.input_schema))
     return into

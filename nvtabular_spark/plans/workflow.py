@@ -33,16 +33,21 @@ def _apply_props(cs: ColumnSchema, props: dict, col: str, outs) -> None:
         cs.properties.update(props)
 
 
-def _annotated(df: DataFrame, annotations: dict) -> Schema:
-    """``df``'s schema (dtypes authoritative) with the tags and
-    properties of ``annotations`` (name → ColumnSchema) laid over it."""
-    schema = Schema.from_spark(df.schema)
+def _overlay(schema: Schema, annotations: dict) -> Schema:
+    """Lay the tags and properties of ``annotations`` (name →
+    ColumnSchema) over ``schema`` in place; returns ``schema``."""
     for cs in schema.column_schemas.values():
         src = annotations.get(cs.name)
         if src is not None:
             cs.tags |= src.tags
             cs.properties.update(src.properties)
     return schema
+
+
+def _annotated(df: DataFrame, annotations: dict) -> Schema:
+    """``df``'s schema (dtypes authoritative) with the tags and
+    properties of ``annotations`` laid over it."""
+    return _overlay(Schema.from_spark(df.schema), annotations)
 
 
 class Workflow:

@@ -18,9 +18,9 @@ empty diff means the change kept every plan. SECTIONS is a comma list
 * ``fusion`` — the ``fit_report`` (with ``fused_plans``) of every
   fitting run in the shared-key fusion tests of tests/test_workflow.py.
 
-Normalization strips expression ids, ``plan_id``s, random hex
-suffixes, file paths and the tail of truncated plan lines. Takes about
-two minutes on 4 cores.
+Normalization strips expression ids, ``plan_id``s, lambda variable
+numbers, random hex suffixes, file paths and the tail of truncated
+plan lines. Takes about two minutes on 4 cores.
 """
 import contextlib
 import json
@@ -36,6 +36,9 @@ from pyspark.sql import DataFrameWriter, SparkSession
 def norm(text: str) -> str:
     text = re.sub(r"#\d+L?", "", text)
     text = re.sub(r"plan_id=\d+", "plan_id=", text)
+    # lambda variables are numbered by a session-wide counter, so an
+    # earlier query that builds more lambdas renumbers later plans
+    text = re.sub(r"(lambda [a-z]+)_\d+", r"\1", text)
     text = re.sub(r"[0-9a-f]{6,}", "H", text)
     text = re.sub(r"[^\s,\[]*\.\.\.(?=\n|$)", "...", text)
     return re.sub(r"file:[^\s,\]]*", "PATH", text)

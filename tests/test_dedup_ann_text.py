@@ -415,19 +415,47 @@ def test_real_png_decode_roundtrip_and_filters(spark):
     np.testing.assert_allclose(f_png, f_bmp, rtol=1e-6)
 
 
-def test_ngram_prefix_filter_equals_naive(spark, docs_df):
-    """PPJoin-style prefix/length filtering is an EXACT optimization:
-    identical (id_a, id_b, jaccard) to the naive full-posting plan, at
-    several thresholds."""
+def _brute_force_jaccard(texts, n, threshold):
+    """(i, j, jaccard) of every doc pair over python sets of word
+    n-grams (the engine splits words on single spaces)."""
+    def shingles(t):
+        ws = t.split(" ")
+        return {tuple(ws[i:i + n]) for i in range(len(ws) - n + 1)}
+    ss = [shingles(t) for t in texts]
+    return sorted(
+        (i, j, round(len(ss[i] & ss[j]) / len(ss[i] | ss[j]), 9))
+        for i in range(len(ss)) for j in range(i + 1, len(ss))
+        if ss[i] and ss[j]
+        and len(ss[i] & ss[j]) / len(ss[i] | ss[j]) >= threshold)
+
+
+def test_ngram_jaccard_equals_brute_force(spark, docs_df):
+    """The prefix/length/positional/bitmap filters are EXACT: identical
+    (id_a, id_b, jaccard) to brute-force python Jaccard over word
+    trigram sets, at several thresholds, capped and uncapped."""
+    texts = [r["text"] for r in docs_df.orderBy("doc_id").collect()]
     for t in (0.3, 0.5, 0.8):
-        fast = dedup.ngram_jaccard_pairs(docs_df, n=3, threshold=t,
-                                         prefix_filter=True).toPandas()
-        naive = dedup.ngram_jaccard_pairs(docs_df, n=3, threshold=t,
-                                          prefix_filter=False).toPandas()
-        key = lambda d: sorted(
-            (int(a), int(b), round(float(j), 9))
-            for a, b, j in d[["id_a", "id_b", "jaccard"]].to_numpy())
-        assert key(fast) == key(naive), f"threshold {t}"
+        exp = _brute_force_jaccard(texts, 3, t)
+        for cap in (10000, None):
+            got = dedup.ngram_jaccard_pairs(docs_df, n=3, threshold=t,
+                                            max_posting=cap).toPandas()
+            assert sorted(
+                (int(a), int(b), round(float(j), 9))
+                for a, b, j in got[["id_a", "id_b", "jaccard"]].to_numpy()
+            ) == exp, f"threshold {t}, max_posting {cap}"
+
+
+def test_ngram_jaccard_one_plan(spark, docs_df, tmp_path):
+    """A 6-doc parquet corpus (whose scan statistics give a small row
+    estimate) runs the prefix plan too: the bitmap residual is in the
+    candidate join, and the verify joins carry no broadcast hint, so
+    AQE decides from measured bytes."""
+    docs_df.write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    plan = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5) \
+        ._jdf.queryExecution().optimizedPlan().toString()
+    assert "bit_count" in plan
+    assert "broadcast" not in plan.lower()
 
 
 def test_ivf_stored_assignment_equals_inline(spark, tmp_path):

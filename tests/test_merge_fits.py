@@ -71,6 +71,19 @@ def test_merge_value_count(spark):
     assert vc == {"min": 1, "max": 4}
 
 
+def test_merge_value_count_after_load(spark, tmp_path):
+    """After save/load the schema no longer shares the ops' property
+    objects, so merge_fits must re-derive the merged properties."""
+    da = spark.createDataFrame(pd.DataFrame({"f": [[1, 2], [3]]}))
+    db = spark.createDataFrame(pd.DataFrame({"f": [[1, 2, 3, 4]]}))
+    pa, pb = str(tmp_path / "a"), str(tmp_path / "b")
+    nvt.Workflow(["f"] >> ops.ValueCount()).fit(da).save(pa)
+    nvt.Workflow(["f"] >> ops.ValueCount()).fit(db).save(pb)
+    merged = nvt.merge_fits(nvt.Workflow.load(pa), nvt.Workflow.load(pb))
+    vc = merged.output_schema["f"].properties["value_count"]
+    assert vc["min"] == 1 and vc["max"] == 4
+
+
 def test_merge_refuses_order_statistics(spark):
     d = spark.createDataFrame(pd.DataFrame(
         {"x": [1.0, 2.0, None, 4.0], "k": [0, 1, 2, 3]}))
